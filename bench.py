@@ -255,19 +255,15 @@ def main() -> None:
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
         if name == "etl_pipeline_run":
-            # end-to-end ETL throughput by the reference's own formula
-            # (records / pipeline processing time, main.py:639). Since
-            # the generate and load phases are pipelined per table,
-            # total_time necessarily includes the (overlapped) source
-            # generation the reference's 3,920 rec/s baseline excludes
-            # — i.e. this metric is measured CONSERVATIVELY vs the
-            # baseline. The timings entry charges full wall time.
-            df.collect()
-            from simpleetlpipeline_spark import pipeline as _pl
-
-            m = _pl.LAST_RUN_METRICS
-            return (time.perf_counter() - t0,
-                    round(m.records_processed / m.total_time, 1))
+            # end-to-end ETL throughput: the lineage's records_processed
+            # over the wall time of the entry call plus collect(). That
+            # includes the (pipelined) source generation and the
+            # lineage re-read the reference's 3,920 rec/s baseline
+            # excludes, so the metric is CONSERVATIVE vs the baseline.
+            rows = df.collect()
+            elapsed = time.perf_counter() - t0
+            return elapsed, round(
+                sum(r["records_processed"] for r in rows) / elapsed, 1)
         df.count()
         return time.perf_counter() - t0, None
 

@@ -31,21 +31,21 @@ def _spark():
 
 
 def cmd_run(args) -> int:
-    from simpleetlpipeline_spark.pipeline import (
-        ETLConfig,
-        run_generated_pipeline,
-    )
+    from simpleetlpipeline_spark.generator import table_builders
+    from simpleetlpipeline_spark.pipeline import ETLConfig, run_full_pipeline
 
     cfg = (ETLConfig.from_yaml(args.config,
                                warehouse_dir=os.path.join(
                                    args.workdir, "warehouse"))
            if args.config else
            ETLConfig(warehouse_dir=os.path.join(args.workdir, "warehouse")))
-    m = run_generated_pipeline(
-        _spark(), os.path.join(args.workdir, "src"), cfg,
-        n_customers=int(2000 * args.scale),
+    spark = _spark()
+    builders = table_builders(
+        spark, n_customers=int(2000 * args.scale),
         n_products=int(500 * args.scale),
         n_orders=int(1500 * args.scale))
+    m = run_full_pipeline(
+        spark, os.path.join(args.workdir, "src"), cfg, builders)
     # the reference's run summary (main.py:602-606)
     print(f"records processed: {m.records_processed}")
     print(f"records inserted:  {m.records_inserted}")

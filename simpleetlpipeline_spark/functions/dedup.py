@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from simpleetlpipeline_spark.cache import track
-from simpleetlpipeline_spark.io import fan_out, read_table
+from simpleetlpipeline_spark.io import driver_rows_df, fan_out, read_table
 from simpleetlpipeline_spark.session import ensure_session_conf
 
 # MinHash parameters: 32 hash functions = 8 bands x 4 rows.
@@ -864,22 +864,10 @@ def connected_components(edges: DataFrame, a: str = "a_id",
                     parent[rd] = rs
                 else:
                     parent[rs] = rd
-        # Arrow re-entry (round 12, guide §4/§6): createDataFrame over
-        # a plain Python list takes the pickled-RDD path — the label
-        # table parallelized into one slice PER CORE and pushed through
-        # 32 Python-worker tasks (profiled: 1.56s of a 1.5s-total
-        # query for ~700 rows). A pandas frame rides the Arrow path:
-        # one batch, one partition, no Python workers.
-        import pandas as pd
-
-        spark = edges.sparkSession
         edges_p.unpersist()
-        nodes = list(parent)
-        out_pdf = pd.DataFrame(
-            {"node": pd.Series(nodes, dtype="int64"),
-             "component": pd.Series([find(n) for n in nodes],
-                                    dtype="int64")})
-        return spark.createDataFrame(out_pdf)
+        return driver_rows_df(
+            edges.sparkSession, [(n, find(n)) for n in list(parent)],
+            "node long, component long")
 
     # Distributed regime: every propagation round joins against the
     # symmetric edge list, so IT carries the persist from here on

@@ -41,6 +41,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from simpleetlpipeline_spark.cache import shared
 from simpleetlpipeline_spark.operators.dates import ts_lit
 from simpleetlpipeline_spark.functions.similarity import as_double_vec
 from simpleetlpipeline_spark.functions.text import tokens_col
@@ -297,18 +298,6 @@ KMEANS_ITERS = 2   # assignment rounds (1 centroid update between)
 _KMEANS_ROUND = 6
 
 
-#: Session-scoped memo of the Lloyd assignment frame, keyed on
-#: (applicationId, sf_dir, k, iters). kmeans_assign and
-#: kmeans_cluster_purity each replayed the FULL Lloyd loop (init
-#: collect + per-round centroid collect + one ArrowEvalPython pass
-#: over the corpus); the assignment is 3 narrow int columns, so the
-#: family shares ONE registry-tracked persist built lazily by its
-#: first consumer inside that consumer's own timed region (round 13,
-#: guide §5 — same governance as the dedup pair cache; release_caches
-#: unpersists it, after which a memo hit just recomputes).
-_ASSIGN_MEMO: dict = {}
-
-
 def kmeans_assign(spark: SparkSession, sf_dir: str,
                   k: int = KMEANS_K,
                   iters: int = KMEANS_ITERS) -> DataFrame:
@@ -334,10 +323,15 @@ def kmeans_assign(spark: SparkSession, sf_dir: str,
     so cluster/label agreement can be eyeballed downstream.
     """
     ensure_session_conf(spark)
-    memo_key = (spark.sparkContext.applicationId, sf_dir, k, iters)
-    memoed = _ASSIGN_MEMO.get(memo_key)
-    if memoed is not None:
-        return memoed
+    # The assignment is 3 narrow int columns shared by kmeans_assign
+    # and kmeans_cluster_purity, so the family reuses one
+    # registry-owned persist instead of replaying the Lloyd loop.
+    return shared(spark, ("kmeans_assign", sf_dir, k, iters),
+                  lambda: _lloyd_assign(spark, sf_dir, k, iters))
+
+
+def _lloyd_assign(spark: SparkSession, sf_dir: str, k: int,
+                  iters: int) -> DataFrame:
     emb = fan_out(read_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "label", as_double_vec(F.col("embedding")).alias("e"))
     emb.persist()
@@ -383,12 +377,7 @@ def kmeans_assign(spark: SparkSession, sf_dir: str,
             means = assigned.groupBy("cluster").agg(mean_arr.alias("c"))
             for r in means.collect():
                 cents[r["cluster"]] = list(r["c"])
-        from simpleetlpipeline_spark.cache import track
-
-        out = track(
-            _assign(emb).select("vec_id", "label", "cluster").persist())
-        _ASSIGN_MEMO[memo_key] = out
-        return out
+        return _assign(emb).select("vec_id", "label", "cluster")
     finally:
         emb.unpersist()
 

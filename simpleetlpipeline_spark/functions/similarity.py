@@ -35,9 +35,10 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from simpleetlpipeline_spark.cache import shared
 from simpleetlpipeline_spark.functions.dedup import (
     cap_bucket_members, collapse_exact_groups, star_pairs)
-from simpleetlpipeline_spark.io import fan_out, read_table
+from simpleetlpipeline_spark.io import driver_rows_df, fan_out, read_table
 from simpleetlpipeline_spark.session import ensure_session_conf
 
 N_PROBES = 10          # probe set = vec_id < N_PROBES
@@ -107,23 +108,16 @@ def _table_bytes(sf_dir: str, name: str) -> int:
         if os.path.isfile(p))
 
 
-_TABLE_ROWS_CACHE: dict = {}
-
-
-def _table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
-    """Row count of one testdata table via the parquet footer
-    statistics (count() over a bare scan plans as a metadata-only
-    aggregate — no data pages read). Sizes the LSH band width.
-    Memoized per (sf_dir, name) — same pattern as io's timestamp-type
-    probe — so repeated query CONSTRUCTION stays job-free (pinned by
-    test_no_driver_collect_in_query_construction)."""
+def _table_rows(sf_dir: str, name: str) -> int:
+    """Row count of one testdata table from its parquet footers, read
+    on the driver (no Spark job, so query construction stays
+    job-free). Sizes the LSH band width."""
     import os
 
-    key = (sf_dir, name)
-    if key not in _TABLE_ROWS_CACHE:
-        _TABLE_ROWS_CACHE[key] = spark.read.parquet(
-            os.path.join(sf_dir, f"{name}.parquet")).count()
-    return _TABLE_ROWS_CACHE[key]
+    import pyarrow.dataset as ds
+
+    return ds.dataset(os.path.join(sf_dir, f"{name}.parquet"),
+                      format="parquet").count_rows()
 
 
 def as_double_vec(embedding: Column) -> Column:
@@ -144,35 +138,19 @@ def cosine(a: Column, b: Column, a_norm: Column, b_norm: Column) -> Column:
     return F.floor(dot(a, b) / (a_norm * b_norm) * 10000) / 10000
 
 
-#: Session-scoped memo of the parsed-vector frame, keyed on
-#: (applicationId, sf_dir). Ten ANN/embedding catalog entries each
-#: re-derived scan -> fan_out -> 64-way cast -> norm (several times
-#: per query where probe/corpus branches fork); the frame is one
-#: registry-tracked persist built lazily by the family's first
-#: consumer inside its own timed region (round 13, guide §5 — no
-#: eager prefill, per the round-12 lesson; release_caches unpersists
-#: it, after which a memo hit just recomputes).
-_VECTORS_MEMO: dict = {}
-
-
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The parsed-vector frame (vec_id, label, e, nrm) shared by the
+    ANN/embedding family: one registry-owned persist per sf_dir,
+    built lazily by the family's first consumer."""
     # fan_out: every consumer runs an O(dim) interpreted fold per pair
     # downstream of this scan, usually on the streamed side of a
     # broadcast join — i.e. at the scan's own parallelism. label
     # rides along so the IVF coarse quantizer can share the cache.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _VECTORS_MEMO.get(key)
-    if got is None:
-        from simpleetlpipeline_spark.cache import track
-
-        got = track(
-            fan_out(read_table(spark, sf_dir, "embeddings"))
-            .select("vec_id", "label",
-                    as_double_vec(F.col("embedding")).alias("e"))
-            .withColumn("nrm", l2_norm(F.col("e")))
-            .persist())
-        _VECTORS_MEMO[key] = got
-    return got
+    return shared(spark, ("vectors", sf_dir), lambda: (
+        fan_out(read_table(spark, sf_dir, "embeddings"))
+        .select("vec_id", "label",
+                as_double_vec(F.col("embedding")).alias("e"))
+        .withColumn("nrm", l2_norm(F.col("e")))))
 
 
 def _topk_per_probe(scored: DataFrame, k: int = TOP_K) -> DataFrame:
@@ -289,7 +267,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str,
     vecs = _vectors(spark, sf_dir)
     # Band width scales with corpus size (see LSH_TARGET_OCCUPANCY):
     # constant occupancy keeps the candidate join linear in n.
-    bits = _lsh_bits_for(_table_rows(spark, sf_dir, "embeddings"))
+    bits = _lsh_bits_for(_table_rows(sf_dir, "embeddings"))
     bucketer = _lsh_bucket_udf(planes=LSH_BANDS * bits, bands=LSH_BANDS)
     # Band keys only — the candidate join moves (vec_id, bb) pairs,
     # never the 64-dim payload. Shuffling vectors through the band
@@ -433,7 +411,7 @@ def embedding_neardup_lsh(spark: SparkSession, sf_dir: str,
     # Constant-occupancy band width (see LSH_TARGET_OCCUPANCY): the
     # self-join candidate count stays ~bands*occ/2 * n — linear —
     # instead of n^2/B at any fixed width.
-    bits = _lsh_bits_for(_table_rows(spark, sf_dir, "embeddings"))
+    bits = _lsh_bits_for(_table_rows(sf_dir, "embeddings"))
     bucketer = _lsh_bucket_udf(planes=LSH_BANDS * bits, bands=LSH_BANDS)
     bands = cap_bucket_members(
         vecs.select("vec_id",
@@ -1438,6 +1416,9 @@ def pq_ann_topk(spark: SparkSession, sf_dir: str,
                     d = d + x * x
                 flat.append(int(math.floor(d * 1e9)))
         table_rows.append((p["vec_id"], flat))
+    if not table_rows:  # array() would type as array<void>
+        return driver_rows_df(
+            spark, [], "a_id long, b_id long, rank int, dist9 long")
     # One parsed literal (a single py4j round-trip, like the kmeans
     # positional-avg aggregate): n_probes structs of (a_id, 128-long
     # ADC table), exploded per corpus row — the in-row form of the
@@ -1838,8 +1819,6 @@ def embedding_pca_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             float(np.floor(cum * 1e6) / 1e6),
             int(np.argmax(np.abs(evecs[:, k]))),
         ))
-    from simpleetlpipeline_spark.io import driver_rows_df
-
     return driver_rows_df(
         spark, rows, "component int, eigenvalue double, "
                      "explained_ratio double, cumulative_ratio double, "

@@ -25,11 +25,10 @@ the engine per the build brief's scale mandate.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from simpleetlpipeline_spark.io import read_table
+from simpleetlpipeline_spark.io import driver_rows_df, read_table
 from simpleetlpipeline_spark.session import ensure_session_conf
 
 #: HLL relative standard deviation; the _ok bound allows 3 sigma.
@@ -179,18 +178,14 @@ def heavy_hitter_users(spark: SparkSession, sf_dir: str,
         sketch = None
     # The k result rows are already on the driver (the sanctioned
     # small collect above); returning `top` would re-run the whole
-    # groupBy + TakeOrdered when the caller acts on it (round 13,
-    # guide §1 — two jobs re-deriving 10 known rows). Re-enter
-    # through pandas/Arrow and check sketch membership in Python —
-    # identical rows, identical sketch_ok semantics.
-    pdf = pd.DataFrame({
-        "user_id": [r["user_id"] for r in top_rows],
-        "n_events": [r["n_events"] for r in top_rows],
-        "sketch_ok": [sketch is None or r["user_id"] in sketch
-                      for r in top_rows],
-    })
-    return spark.createDataFrame(
-        pdf, "user_id long, n_events long, sketch_ok boolean")
+    # groupBy + TakeOrdered when the caller acts on it. Re-enter them
+    # and check sketch membership in Python — identical rows,
+    # identical sketch_ok semantics.
+    return driver_rows_df(
+        spark,
+        [(r["user_id"], r["n_events"],
+          sketch is None or r["user_id"] in sketch) for r in top_rows],
+        "user_id long, n_events long, sketch_ok boolean")
 
 
 QUERIES["heavy_hitter_users"] = heavy_hitter_users

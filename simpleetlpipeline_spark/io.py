@@ -479,15 +479,18 @@ def compact_table(spark: SparkSession, table_path: str,
 
 def driver_rows_df(spark: SparkSession, rows, schema) -> DataFrame:
     """Re-enter a SMALL driver-held result as a DataFrame via
-    pandas/Arrow (round 13, guide §6): `createDataFrame(list)`
-    parallelizes one pickled RDD slice per core — a 32-task job
-    (~0.3-0.5s warm, ~1.5s cold) to ship a handful of rows. Several
-    catalog entries materialize a tiny result driver-side so a
-    scratch warehouse can be deleted; this is their shared re-entry.
+    pandas/Arrow: `createDataFrame(list)` parallelizes one pickled RDD
+    slice per core — a 32-task job (~0.3-0.5s warm, ~1.5s cold) to
+    ship a handful of rows. Several catalog entries materialize a
+    tiny result driver-side so a scratch warehouse can be deleted;
+    this is their shared re-entry.
 
     `rows` are pyspark Rows or plain tuples (positional access);
     `schema` is a StructType or DDL string. Flat scalar schemas only
-    — exactly what the call sites produce.
+    — exactly what the call sites produce. Columns stay object dtype
+    so the declared schema, not pandas inference, types them: an
+    inferred [int, None] column is float64, which rounds longs above
+    2**53. Empty `rows` give an empty frame of that schema.
     """
     import pandas as pd
     from pyspark.sql.types import StructType as _St
@@ -496,7 +499,8 @@ def driver_rows_df(spark: SparkSession, rows, schema) -> DataFrame:
         schema = _St.fromDDL(schema)
     names = [f.name for f in schema.fields]
     pdf = pd.DataFrame(
-        {n: [r[i] for r in rows] for i, n in enumerate(names)},
+        {n: pd.Series([r[i] for r in rows], dtype=object)
+         for i, n in enumerate(names)},
         columns=names)
     return spark.createDataFrame(pdf, schema)
 

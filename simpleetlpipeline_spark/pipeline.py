@@ -33,8 +33,10 @@ from pyspark.sql import functions as F
 
 from simpleetlpipeline_spark.io import (
     append_table,
+    driver_rows_df,
     read_csv,
     read_table_version,
+    write_csv,
     write_table_version,
 )
 from simpleetlpipeline_spark.operators.joins import rollup_update
@@ -49,48 +51,30 @@ from simpleetlpipeline_spark.session import ensure_session_conf
 #: Submission order (reference's FK-respecting order, main.py:570-575).
 LOAD_ORDER = ("customers", "products", "orders", "order_items")
 
-#: Metrics of the most recent etl_pipeline_run in this process —
-#: lets bench.py report the reference's own throughput formula
-#: (records / pipeline processing time, main.py:639) without
-#: polluting the deterministic lineage result columns.
-LAST_RUN_METRICS: "RunMetrics | None" = None
-
-
 @dataclass
 class ETLConfig:
     """Engine config (reference ETLConfig, main.py:21-28).
 
-    batch_size survives only as the JDBC-sink batch hint; parquet
-    writes batch per-partition naturally. parallel_tables makes the
-    reference's declared-but-never-used parallelism (ThreadPoolExecutor
-    imported main.py:12, parallel_threads=4 main.py:27, execution
-    actually serial under a global lock main.py:84) real: the four
-    tables land in independent warehouse paths, so their
-    extract→transform→load chains are independent Spark job DAGs that
-    the scheduler interleaves across executors.
+    parallel_tables makes the reference's declared-but-never-used
+    parallelism (ThreadPoolExecutor imported main.py:12,
+    parallel_threads=4 main.py:27, execution actually serial under a
+    global lock main.py:84) real: the four tables land in independent
+    warehouse paths, so their extract→transform→load chains are
+    independent Spark job DAGs that the scheduler interleaves across
+    executors.
     """
     warehouse_dir: str = "warehouse"
-    batch_size: int = 1000
     retention_days: int = 365
     parallel_tables: int = 4
     #: data_quality.minimum_quality_score (y:32) — the load-report
     #: gate level quality_summary/pipeline_status health derives from.
     min_quality_score: float = 80.0
-    #: data_quality.quality_thresholds (y:36-40): per-table override.
-    quality_thresholds: dict = field(default_factory=dict)
     #: business_rules.orders[valid_total_calculation].tolerance (y:81)
     #: — the F5/F6 money tolerance; also drives the optional
     #: total_mismatch rule in plans.analytics.validation_rules.
     money_tolerance: float = 0.01
     #: sample_data.{customers,products,orders}.count (y:43-67).
     sample_sizes: dict = field(default_factory=dict)
-    #: database.pragma_settings (y:7-11), kept verbatim. SQLite
-    #: pragmas have no per-query Spark action — the analog conf
-    #: (AQE, shuffle partitions, UTC) is session-level
-    #: (session._RUNTIME_CONF); recorded here so a migrated config
-    #: round-trips losslessly, same documented-no-op stance as
-    #: secondary indexes (io.create_index).
-    pragmas: dict = field(default_factory=dict)
 
     @classmethod
     def from_yaml(cls, path: str, **overrides) -> "ETLConfig":
@@ -100,16 +84,17 @@ class ETLConfig:
         there is no loader behavior to match, only the keys a
         migrating user actually holds).
 
-        Key map: etl.batch_size -> batch_size, etl.parallel_threads
-        -> parallel_tables, etl.data_retention_days ->
-        retention_days, data_quality.* -> quality fields,
+        Key map: etl.parallel_threads -> parallel_tables,
+        etl.data_retention_days -> retention_days,
+        data_quality.minimum_quality_score -> min_quality_score,
         business_rules.orders[].tolerance -> money_tolerance,
-        sample_data.*.count -> sample_sizes, database.pragma_settings
-        -> pragmas. Unknown sections (logging, visualization,
-        notifications, ...) are process-level concerns with no engine
-        surface and are ignored. kwargs override parsed values
-        (warehouse_dir in particular — the YAML has no warehouse
-        concept; SQLite had one file, we have a directory).
+        sample_data.*.count -> sample_sizes. Keys no engine code reads
+        (etl.batch_size, data_quality.quality_thresholds, database.*,
+        logging, visualization, notifications, ...) are ignored.
+        SQLite pragmas have no per-query Spark action; the analog
+        conf is session-level (session._RUNTIME_CONF). kwargs override
+        parsed values (warehouse_dir in particular — the YAML has no
+        warehouse concept; SQLite had one file, we have a directory).
         """
         import yaml
 
@@ -128,20 +113,14 @@ class ETLConfig:
             if isinstance(spec, dict) and "count" in spec
         }
         kwargs = dict(
-            batch_size=int(etl.get("batch_size", cls.batch_size)),
             parallel_tables=int(etl.get("parallel_threads",
                                         cls.parallel_tables)),
             retention_days=int(etl.get("data_retention_days",
                                        cls.retention_days)),
             min_quality_score=float(dq.get("minimum_quality_score",
                                            cls.min_quality_score)),
-            quality_thresholds={
-                k: float(v)
-                for k, v in (dq.get("quality_thresholds") or {}).items()},
             money_tolerance=tolerance,
             sample_sizes=sample_sizes,
-            pragmas=dict((raw.get("database") or {})
-                         .get("pragma_settings") or {}),
         )
         kwargs.update(overrides)
         return cls(**kwargs)
@@ -280,7 +259,9 @@ def update_calculated_fields(spark: SparkSession, config: ETLConfig) -> DataFram
 
 
 def run_full_pipeline(spark: SparkSession, source_dir: str,
-                      config: ETLConfig) -> RunMetrics:
+                      config: ETLConfig,
+                      builders: dict[str, DataFrame] | None = None
+                      ) -> RunMetrics:
     """ETL loop with per-table failure isolation (reference
     run_full_pipeline, main.py:560-610): one table's failure records
     an error and the rest still load.
@@ -293,6 +274,14 @@ def run_full_pipeline(spark: SparkSession, source_dir: str,
     existed because SQLite enforced... nothing (FKs declared, never
     enabled; SURVEY.md §2.4 J3) — and the one true dependency, the
     customer rollup, runs after the barrier below.
+
+    With `builders` ({table: DataFrame}, e.g. generator.table_builders)
+    each table's chain first writes its source CSV under source_dir,
+    so generation is PIPELINED per table: customers loads while
+    order_items is still generating, and wall-clock is the longest
+    single chain plus the rollup rather than a generate barrier
+    followed by a load barrier. Without it the CSVs must already
+    exist.
     """
     from concurrent.futures import ThreadPoolExecutor
 
@@ -300,60 +289,12 @@ def run_full_pipeline(spark: SparkSession, source_dir: str,
     metrics = RunMetrics()
     t0 = time.monotonic()
 
-    def _one(table: str) -> tuple[str, float, tuple[int, int] | None, str | None]:
-        t_start = time.monotonic()
-        try:
-            counts = load_table(
-                spark, table, os.path.join(source_dir, f"{table}.csv"), config)
-            return table, time.monotonic() - t_start, counts, None
-        except Exception as exc:  # noqa: BLE001 — isolation is the contract
-            return table, time.monotonic() - t_start, None, str(exc)
-
-    with ThreadPoolExecutor(max_workers=max(1, config.parallel_tables)) as ex:
-        results = list(ex.map(_one, LOAD_ORDER))
-    for table, elapsed, counts, err in results:
-        metrics.table_times[table] = round(elapsed, 4)
-        if err is None:
-            metrics.records_processed += counts[0]
-            metrics.records_inserted += counts[1]
-            metrics.successful_tables += 1
-        else:
-            metrics.failed_tables += 1
-            metrics.errors[table] = err
-    if metrics.errors.keys().isdisjoint({"customers", "orders"}):
-        update_calculated_fields(spark, config)
-    metrics.total_time = round(time.monotonic() - t0, 4)
-    return metrics
-
-
-def run_generated_pipeline(spark: SparkSession, source_dir: str,
-                           config: ETLConfig, n_customers: int,
-                           n_products: int, n_orders: int) -> RunMetrics:
-    """Generate → load with the two phases PIPELINED per table: each
-    table's CSV generation and its extract→transform→load chain run
-    in one submission thread, so customers loads while order_items is
-    still generating. Wall-clock is the longest single table chain
-    plus the rollup — not a generate barrier followed by a load
-    barrier (measured ~35% faster than the sequential phases at
-    sf0.1-equivalent volume). Used by the catalog/bench entry;
-    run_full_pipeline remains the pure-load surface for pre-existing
-    sources (reference parity: generate and run are separate stages,
-    main.py:757-775, but nothing in the data couples the barriers)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from simpleetlpipeline_spark.generator import table_builders
-    from simpleetlpipeline_spark.io import write_csv
-
-    ensure_session_conf(spark)
-    metrics = RunMetrics()
-    t0 = time.monotonic()
-    builders = table_builders(spark, n_customers, n_products, n_orders)
-
     def _chain(table: str):
         t_start = time.monotonic()
         src = os.path.join(source_dir, f"{table}.csv")
         try:
-            write_csv(builders[table], src)
+            if builders is not None:
+                write_csv(builders[table], src)
             counts = load_table(spark, table, src, config)
             return table, time.monotonic() - t_start, counts, None
         except Exception as exc:  # noqa: BLE001 — isolation is the contract
@@ -433,7 +374,10 @@ def etl_pipeline_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest (test_metadata_lineage) and the S8 parity goldens.
     """
     import re
+    import shutil
     import tempfile
+
+    from simpleetlpipeline_spark.generator import table_builders
 
     td = tempfile.mkdtemp(prefix="etl_run_")
     _ensure_etl_src_parent()
@@ -446,12 +390,11 @@ def etl_pipeline_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     # orders, ~450k items).
     m = re.search(r"sf([0-9.]+)", sf_dir or "")
     scale = max(float(m.group(1)) / 0.001, 0.2) if m else 1.0
-    metrics = run_generated_pipeline(
-        spark, src, cfg,
-        n_customers=int(2000 * scale), n_products=int(500 * scale),
+    ensure_session_conf(spark)  # before the generator plans analyze
+    builders = table_builders(
+        spark, n_customers=int(2000 * scale), n_products=int(500 * scale),
         n_orders=int(1500 * scale))
-    global LAST_RUN_METRICS
-    LAST_RUN_METRICS = metrics
+    metrics = run_full_pipeline(spark, src, cfg, builders)
     if metrics.failed_tables:
         raise RuntimeError(f"pipeline failures: {metrics.errors}")
     # Declared schema: skips the footer-inference job on the freshly
@@ -463,19 +406,10 @@ def etl_pipeline_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         "records_failed", "data_quality_score")
     # The lineage result is one row per table; materialize it so the
     # throwaway warehouse can be deleted (repeated bench/driver runs
-    # otherwise accumulate scratch dirs in /tmp). Re-entry goes
-    # through pandas/Arrow: createDataFrame(list-of-Rows) pickles
-    # through one RDD slice per core — a 32-task job (~1.5s cold,
-    # ~0.4s warm) to ship 4 driver rows (round 13, guide §6).
-    import shutil
-
-    import pandas as pd
-
+    # otherwise accumulate scratch dirs in /tmp).
     rows, schema = out.collect(), out.schema
     shutil.rmtree(td, ignore_errors=True)
-    pdf = pd.DataFrame([r.asDict() for r in rows],
-                       columns=[f.name for f in schema.fields])
-    return spark.createDataFrame(pdf, schema)
+    return driver_rows_df(spark, rows, schema)
 
 
 def prune_metadata(spark: SparkSession, config: ETLConfig,
@@ -548,7 +482,8 @@ def pipeline_status(spark: SparkSession, config: ETLConfig) -> dict:
     latest = [r.asDict() for r in
               meta.orderBy(F.desc("etl_timestamp")).limit(10).collect()]
     quality = agg["avg_quality"]
-    health = ("healthy" if quality is not None and quality >= 80.0
+    health = ("healthy" if quality is not None
+              and quality >= config.min_quality_score
               else "degraded" if quality is not None else "idle")
     # Optimizer stats, if analyze_tables has registered + analyzed the
     # warehouse tables in this session (cheap catalog lookups only —

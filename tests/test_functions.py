@@ -270,6 +270,17 @@ def test_connected_components_planted_graph(spark, driver_threshold):
                    1: 1, 2: 1, 7: 1}
 
 
+def test_connected_components_empty_edges_typed(spark):
+    """An empty edge list takes the driver union-find path and must
+    come back as an empty (node long, component long) frame."""
+    from simpleetlpipeline_spark.functions.dedup import connected_components
+
+    edges = spark.createDataFrame([], "a_id long, b_id long")
+    out = connected_components(edges)
+    assert out.schema.simpleString() == "struct<node:bigint,component:bigint>"
+    assert out.collect() == []
+
+
 def test_dedup_clusters_merges_planted_dups(spark):
     """Three copies of one doc + two of another -> two clusters with
     the minimum doc_id as canonical."""
@@ -687,3 +698,24 @@ def test_doc_token_profile_matches_narrow_operators(spark, sf_dir):
         assert p["quality_score"] == stats[did]["quality_score"]
         assert p["detected_lang"] == langs[did]["detected_lang"]
         assert p["md5_fingerprint"] == md5s[did]
+
+
+def test_shared_frames_rebuilt_after_release(spark, sf_dir):
+    """Registry-shared frames (parsed vectors, k-means assignment) are
+    reused within a session, and release_caches() forgets them: the
+    next caller gets a NEW persisted frame that the following release
+    counts, never the released, unpersisted one."""
+    from simpleetlpipeline_spark import cache
+    from simpleetlpipeline_spark.functions.pretrain import kmeans_assign
+    from simpleetlpipeline_spark.functions.similarity import _vectors
+
+    cache.release_caches()
+    first = [_vectors(spark, sf_dir), kmeans_assign(spark, sf_dir)]
+    assert _vectors(spark, sf_dir) is first[0]
+    assert kmeans_assign(spark, sf_dir) is first[1]
+    assert cache.release_caches() == 2
+    again = [_vectors(spark, sf_dir), kmeans_assign(spark, sf_dir)]
+    for old, new in zip(first, again):
+        assert new is not old
+        assert new.storageLevel.useMemory
+    assert cache.release_caches() == 2

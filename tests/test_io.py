@@ -34,6 +34,17 @@ def test_csv_roundtrip(spark, df, tmp_path):
     assert sorted(map(tuple, back.collect())) == sorted(ROWS)
 
 
+def test_driver_rows_df_keeps_big_long_next_to_null(spark):
+    """The declared schema types re-entered rows: pandas inference
+    would make [2**60 + 1, None] a float64 column and round it."""
+    out = eio.driver_rows_df(
+        spark, [("a", 2**60 + 1), ("b", None)], "k string, n long")
+    assert [r["n"] for r in out.orderBy("k").collect()] == [2**60 + 1, None]
+    empty = eio.driver_rows_df(spark, [], "k string, n long")
+    assert empty.schema.simpleString() == "struct<k:string,n:bigint>"
+    assert empty.collect() == []
+
+
 def test_json_roundtrip(spark, df, tmp_path):
     path = str(tmp_path / "t.json")
     eio.write_json(df, path)

@@ -4,6 +4,7 @@ and products-bug-fix contracts from SURVEY.md §3."""
 
 from __future__ import annotations
 
+import dataclasses
 import os
 
 import pytest
@@ -17,18 +18,22 @@ def run(spark, tmp_path_factory):
     td = tmp_path_factory.mktemp("etl")
     src = str(td / "src")
     cfg = pipeline.ETLConfig(warehouse_dir=str(td / "wh"))
-    generator.generate_sample_data(
-        spark, src, n_customers=400, n_products=120, n_orders=300)
-    metrics = pipeline.run_full_pipeline(spark, src, cfg)
+    builders = generator.table_builders(
+        spark, n_customers=400, n_products=120, n_orders=300)
+    metrics = pipeline.run_full_pipeline(spark, src, cfg, builders=builders)
     return spark, cfg, metrics
 
 
 def test_all_tables_load(run):
-    _, _, metrics = run
+    _, cfg, metrics = run
     assert metrics.successful_tables == 4
     assert metrics.failed_tables == 0
     assert metrics.records_processed > 0
     assert metrics.records_per_second > 0
+    # builders: each table's chain wrote its source CSV before loading
+    src = os.path.join(os.path.dirname(cfg.warehouse_dir), "src")
+    for table in pipeline.LOAD_ORDER:
+        assert os.path.exists(os.path.join(src, f"{table}.csv"))
 
 
 def test_products_table_not_empty(run):
@@ -97,6 +102,14 @@ def test_monitoring_surfaces(run):
     # data-driven optimizer advice derives from those stats
     tips = pipeline.suggest_optimizations(spark, cfg)
     assert tips and any("broadcast" in t for t in tips)
+
+
+def test_health_floor_is_config_min_quality_score(run):
+    spark, cfg, _ = run
+    strict = dataclasses.replace(cfg, min_quality_score=100.01)
+    assert pipeline.pipeline_status(spark, strict)["health"] == "degraded"
+    lenient = dataclasses.replace(cfg, min_quality_score=0.0)
+    assert pipeline.pipeline_status(spark, lenient)["health"] == "healthy"
 
 
 def test_failure_isolation(spark, tmp_path, monkeypatch):

@@ -209,6 +209,24 @@ def test_pq_ann_ranks_exact_copy_first(spark):
         "copy of a codebook vector quantizes losslessly -> ADC 0"
 
 
+def test_pq_ann_without_probe_rows_is_typed_empty(spark):
+    """No vec_id < n_probes: no ADC tables to explode, so the result is
+    an empty frame with the output schema, not an array<void> literal."""
+    import numpy as np
+
+    rng = np.random.RandomState(5)
+    rows = [(50 + i, [float(x) for x in rng.randn(64)], 0)
+            for i in range(30)]
+    with tempfile.TemporaryDirectory() as td:
+        spark.createDataFrame(
+            rows, "vec_id long, embedding array<float>, label int"
+        ).write.parquet(os.path.join(td, "embeddings.parquet"))
+        out = S.pq_ann_topk(spark, td, n_probes=10, k=5)
+        assert out.collect() == []
+    assert out.schema.simpleString() == \
+        "struct<a_id:bigint,b_id:bigint,rank:int,dist9:bigint>"
+
+
 def test_ann_recall_report_bounds(spark, sf_dir):
     """exact must self-score 1.0; approximate methods must return a
     recall in [0,1] over every probe (the report's sanity floor —

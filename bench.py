@@ -4,10 +4,12 @@ session and prints ONE JSON line:
   {"metric": ..., "value": total_sec, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ...}
 
-Timing methodology: per query, build the plan and run a count-style
-action that fully executes it (collect on small results); one warm-up
-run of the flagship query first so JVM/codegen warm-up isn't charged
-to the first measured query.
+Timing methodology: per query, build the plan and run it whole with
+``execute`` (every column of every row, written to the noop sink; the
+ETL entry is collected for its lineage rows); one warm-up run of the
+flagship query first so JVM/codegen warm-up isn't charged to the
+first measured query. ``count()`` is NOT a full execution: Catalyst
+prunes every column under it, so e.g. a Python-UDF column never runs.
 
 Median protocol (round-6 verdict task #6): ``--repeat N`` runs the
 whole measurement loop N times on the same warm session and records
@@ -57,6 +59,21 @@ warnings.filterwarnings(
 #: window with margin (round 2's 66-query line overran it and the
 #: driver recorded "parsed": null).
 LINE_BUDGET = 1900
+
+
+def execute(df) -> int:
+    """Run ``df``'s whole plan and return its row count.
+
+    Every column is computed: the rows go to the ``noop`` sink, which
+    materializes them and discards them, and an Observation counts
+    them on the way. The one action every timing tool shares."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    rows = Observation()
+    (df.observe(rows, F.count(F.lit(1)).alias("n"))
+     .write.format("noop").mode("overwrite").save())
+    return rows.get["n"]
 
 
 def bounded_line(result: dict, budget: int = LINE_BUDGET) -> str:
@@ -232,8 +249,8 @@ def main() -> None:
     # forking + importing pandas/numpy + Arrow init: ~5-13s once per
     # session — round 2's oracled-first ordering made media_meta_extract
     # the first Python query and it absorbed all of it).
-    catalog.QUERIES["media_meta_extract"](
-        spark, "/root/testdata/sf0.001").count()
+    execute(catalog.QUERIES["media_meta_extract"](
+        spark, "/root/testdata/sf0.001"))
 
     # Noisy-neighbor defense: this VM shares a host, and external CPU
     # steal ONLY inflates wall time (observed: the same catalog at
@@ -264,7 +281,7 @@ def main() -> None:
             elapsed = time.perf_counter() - t0
             return elapsed, round(
                 sum(r["records_processed"] for r in rows) / elapsed, 1)
-        df.count()
+        execute(df)
         return time.perf_counter() - t0, None
 
     def measure_pass() -> tuple[dict[str, float], float | None]:

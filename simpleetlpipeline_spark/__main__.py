@@ -25,9 +25,9 @@ import sys
 
 
 def _spark():
-    from simpleetlpipeline_spark.session import get_spark
+    from simpleetlpipeline_spark.session import ensure_session_conf, get_spark
 
-    return get_spark("simpleetl-cli")
+    return ensure_session_conf(get_spark("simpleetl-cli"))
 
 
 def cmd_run(args) -> int:

@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 
 from simpleetlpipeline_spark.cache import track
 from simpleetlpipeline_spark.io import driver_rows_df, fan_out, read_table
-from simpleetlpipeline_spark.session import ensure_session_conf
 
 # MinHash parameters: 32 hash functions = 8 bands x 4 rows.
 # P(candidate | jaccard=s) = 1 - (1 - s^4)^8  — ~0.97 at s=0.8,
@@ -214,7 +213,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full text to shrink the shuffle key — both shown here by
     grouping on the fingerprint and keeping min(doc_id) as canonical.
     """
-    ensure_session_conf(spark)
     docs = read_table(spark, sf_dir, "documents")
     return (
         docs.groupBy(F.md5(F.col("text").cast("binary")).alias("text_md5"))
@@ -237,7 +235,6 @@ def exploded_grams(spark: SparkSession, sf_dir: str,
     recomputing (8s vs ~3s at sf0.1) — cache reuse only wins when the
     same stream is scanned more than once. Registry-owned.
     """
-    ensure_session_conf(spark)
     docs = fan_out(read_table(spark, sf_dir, "documents")).select(
         "doc_id", word_ngram_hashes_col(F.col("text"), ngram).alias("grams"))
     return track(
@@ -274,7 +271,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str,
     (different hash family, same contract — only equality and
     distinct counts are consumed, and probe/corpus share the
     family), so the string-gram DuckDB oracle is unchanged."""
-    ensure_session_conf(spark)
     roll = rolling_window_hashes_udf(ngram)
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     pre = fan_out(read_table(spark, sf_dir, "documents")).select(
@@ -503,7 +499,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str,
     DuckDB recomputes exactly via shared-gram blocking
     (_MINHASH_PAIRS_SQL below), so the gate attests recall itself.
     """
-    ensure_session_conf(spark)
     minhash = minhash_from_gram_hashes_udf()
     raw = fan_out(read_table(spark, sf_dir, "documents"))
     groups = collapse_exact_groups(raw, "doc_id", "text")
@@ -590,7 +585,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str,
     aggregate feeds both the simhash pipeline and the star join —
     one exchange, reused by both branches of the union.
     """
-    ensure_session_conf(spark)
     from simpleetlpipeline_spark.functions.text import tokens_col
 
     simhash = simhash_from_hashes_udf()
@@ -1191,7 +1185,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a persisted bucketed table and the join is exchange-free on
     the batch side only.
     """
-    ensure_session_conf(spark)
     docs = read_table(spark, sf_dir, "documents")
     fp = F.md5(F.col("text").cast("binary"))
     batch = (docs.filter(F.pmod("doc_id", F.lit(INCR_MOD)) == 0)
@@ -1306,7 +1299,6 @@ def dedup_shared_windows(spark: SparkSession, sf_dir: str,
     the pair key; fan-out bounded at C(df_cap, 2) per window at any
     corpus size.
     """
-    ensure_session_conf(spark)
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     docs = fan_out(read_table(spark, sf_dir, "documents")).select(
         "doc_id",
@@ -1404,7 +1396,6 @@ def segment_dedup(spark: SparkSession, sf_dir: str,
     linear in corpus size at any SF.
     Output digest is md5 (computed identically by Spark and DuckDB)
     so the oracle hashes the rebuilt TEXT, not just counts."""
-    ensure_session_conf(spark)
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     n_segs = F.ceil(F.size(toks) / F.lit(float(seg_len))).cast("int")
@@ -1529,7 +1520,6 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str,
         word_gram_strings_expr,
     )
 
-    ensure_session_conf(spark)
     docs = fan_out(read_table(spark, sf_dir, "documents"))
     gram_sources = (docs
                     .withColumn("__toks",
@@ -1635,7 +1625,6 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str,
     output IS the ground-truth pair graph restricted to pairs
     touching a batch document — one WHERE clause on
     _MINHASH_PAIRS_SQL (plus the equivalence pytest)."""
-    ensure_session_conf(spark)
     minhash = minhash_from_gram_hashes_udf()
     raw = fan_out(read_table(spark, sf_dir, "documents"))
     groups = collapse_exact_groups(raw, "doc_id", "text")

@@ -36,7 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from simpleetlpipeline_spark.io import read_table
-from simpleetlpipeline_spark.session import ensure_session_conf
 
 MEDIA_TYPES = ("image", "audio", "video")
 FRAME_BYTES = 64      # fake fixed-size frame for frame sampling
@@ -53,7 +52,6 @@ def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload = utf-8 bytes of text, media_type assigned round-robin.
     This is the schema contract a real ingest (S3 object scan /
     tar-shard reader) would produce."""
-    ensure_session_conf(spark)
     from simpleetlpipeline_spark.io import fan_out
 
     # fan_out: downstream mapInPandas decode kernels run at the scan's
@@ -96,7 +94,6 @@ def media_table_from_dir(spark: SparkSession, path: str,
     dedup) take either table interchangeably — pinned by
     tests/test_multimodal.py::test_media_table_from_dir_contract.
     """
-    ensure_session_conf(spark)
     df = (
         spark.read.format("binaryFile")
         .option("recursiveFileLookup", str(recursive).lower())
@@ -593,7 +590,6 @@ def media_ingest_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     media_type, and the two scans (dedup pass, decode pass) mirror
     a real pipeline's separate listing and processing jobs.
     """
-    ensure_session_conf(spark)
     root = _ingest_fixture_dir(spark, sf_dir)
     media = media_table_from_dir(spark, root)
     base = (
@@ -714,7 +710,6 @@ def media_decode_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the wrong first_unit even though its content_sum matches.
     Encode and decode both run inside one Arrow-batched mapInPandas
     pass — narrow, shuffle-free, linear at any scale."""
-    ensure_session_conf(spark)
     media = media_table(spark, sf_dir)  # fan_out'd documents scan
 
     def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -28,8 +28,6 @@ from pyspark.sql.types import (
 
 from simpleetlpipeline_spark.schemas import TESTDATA_SCHEMAS
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 class EmptySourceError(ValueError):
     """Raised when a source exists but holds no rows.
@@ -162,15 +160,15 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     The events table's ts physical type varies by testdata vintage:
     TIMESTAMP(NANOS) (read as epoch-nanos LONG under
-    spark.sql.legacy.parquet.nanosAsLong, set in session conf) or a
-    plain microsecond TIMESTAMP. Probe the footer type once per
-    (sf_dir, name) and truncate nanos to microseconds exactly as
-    DuckDB/Arrow do so both engines see identical instants; a micros
-    file passes through untouched.
-    """
-    from simpleetlpipeline_spark.session import ensure_session_conf
+    spark.sql.legacy.parquet.nanosAsLong) or a plain microsecond
+    TIMESTAMP. Probe the footer type once per (sf_dir, name) and
+    truncate nanos to microseconds exactly as DuckDB/Arrow do so both
+    engines see identical instants; a micros file passes through
+    untouched.
 
-    ensure_session_conf(spark)
+    nanosAsLong is session conf, which this reader does not assert
+    (get_spark and the catalog boundary do; see session.py).
+    """
     path = os.path.join(sf_dir, f"{name}.parquet")
     schema = TESTDATA_SCHEMAS.get(name)
     if schema is not None:
@@ -203,7 +201,7 @@ def _events_ts_type(spark: SparkSession, path: str):
     micros ints that the nanos->micros truncation then shrinks 1000x).
 
     TIMESTAMP_NTZ is normalized to TIMESTAMP here: if the session's
-    inferTimestampNTZ=false conf didn't take (ensure_session_conf is
+    inferTimestampNTZ=false conf didn't take (the conf assertion is
     best-effort on externally-built sessions), the probe would
     otherwise leak NTZ into the declared schema and break
     unix_micros/watermark/numeric-cast paths downstream. Under the

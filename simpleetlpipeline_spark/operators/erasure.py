@@ -39,7 +39,6 @@ from simpleetlpipeline_spark.io import (
     read_table_version,
     write_table_version,
 )
-from simpleetlpipeline_spark.session import ensure_session_conf
 
 AUDIT_SCHEMA = StructType([
     StructField("table_name", StringType()),
@@ -77,7 +76,6 @@ def user_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Executes at construction by design (same exemption class as
     etl_pipeline_run in the no-collect plan contract)."""
-    ensure_session_conf(spark)
     events = read_table(spark, sf_dir, "events")
     target = (events.groupBy("user_id")
               .agg(F.count(F.lit(1)).alias("n"))

@@ -46,7 +46,6 @@ from simpleetlpipeline_spark.schemas import (
     REFERENCE_SCHEMAS,
     TARGET_COLUMNS,
 )
-from simpleetlpipeline_spark.session import ensure_session_conf
 
 #: Submission order (reference's FK-respecting order, main.py:570-575).
 LOAD_ORDER = ("customers", "products", "orders", "order_items")
@@ -285,7 +284,6 @@ def run_full_pipeline(spark: SparkSession, source_dir: str,
     """
     from concurrent.futures import ThreadPoolExecutor
 
-    ensure_session_conf(spark)
     metrics = RunMetrics()
     t0 = time.monotonic()
 
@@ -390,7 +388,6 @@ def etl_pipeline_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     # orders, ~450k items).
     m = re.search(r"sf([0-9.]+)", sf_dir or "")
     scale = max(float(m.group(1)) / 0.001, 0.2) if m else 1.0
-    ensure_session_conf(spark)  # before the generator plans analyze
     builders = table_builders(
         spark, n_customers=int(2000 * scale), n_products=int(500 * scale),
         n_orders=int(1500 * scale))

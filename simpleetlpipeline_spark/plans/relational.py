@@ -64,7 +64,6 @@ from simpleetlpipeline_spark.operators.dates import (
     ts_lit,
 )
 from simpleetlpipeline_spark.plans.analytics import COMPLETED
-from simpleetlpipeline_spark.session import ensure_session_conf
 
 PROMO_TYPE = "PROMO"
 
@@ -78,7 +77,6 @@ def promo_revenue_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     and floor the share at 4dp — no float-accumulation-order hazard
     reaches the hashed columns.
     """
-    ensure_session_conf(spark)
     part = read_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     lineitem = read_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_shipdate", "l_extendedprice", "l_discount")
@@ -111,7 +109,6 @@ def late_ship_orders(spark: SparkSession, sf_dir: str,
     per order priority — the fulfillment-SLA breach report. The
     EXISTS is a LEFT SEMI join (first match wins, no duplication of
     the probe side), the join shape the reference never used."""
-    ensure_session_conf(spark)
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority")
     lineitem = read_table(spark, sf_dir, "lineitem").select(
@@ -138,7 +135,6 @@ def large_volume_orders(spark: SparkSession, sf_dir: str,
     quantity exceeds `min_qty`, with order attributes attached.
     The aggregate runs BEFORE the join so only the ~1% survivor set
     is joined back — the canonical big-fact pattern."""
-    ensure_session_conf(spark)
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice")
     big = (
@@ -179,7 +175,6 @@ def copurchase_pairs(spark: SparkSession, sf_dir: str,
     the sorted array), then one pair-keyed count agg. The self-join
     version shuffled lineitem three times and re-joined it; this
     moves each basket exactly once."""
-    ensure_session_conf(spark)
     baskets = (
         read_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
@@ -211,7 +206,6 @@ def latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ties on ts broken by highest event_id) via max() over a struct —
     field-by-field struct comparison makes the winner well-defined,
     unlike bare max_by under ties."""
-    ensure_session_conf(spark)
     events = read_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type", "value")
     last = F.max(F.struct("ts", "event_id", "event_type", "value")) \
@@ -234,7 +228,6 @@ def events_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     per event, pull the integer field `k`, and profile it per event
     type. Integer sums are exact, so the mean is one deterministic
     division, floored at 4dp in both engines."""
-    ensure_session_conf(spark)
     events = read_table(spark, sf_dir, "events").select(
         "event_type", "props")
     k = F.get_json_object("props", "$.k").cast("long")
@@ -360,7 +353,6 @@ def events_hourly_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     renders TimestampType through the local process timezone, so a
     non-UTC driver saw shifted wall-clock datetimes.
     """
-    ensure_session_conf(spark)
     events = read_table(spark, sf_dir, "events").select(
         "event_type", hour_bucket("ts").alias("hb"), "value")
     counts = (
@@ -435,7 +427,6 @@ def monthly_sales_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical doubles in identical order (the merged total can
     differ from a full-scan round(sum) by <1 cent by construction —
     the manifest documents per-part rounding, not a re-scan)."""
-    ensure_session_conf(spark)
     orders = (
         read_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == COMPLETED)
@@ -513,7 +504,6 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     TPC-H custkeys are positive at every SF, so negation can never
     collide with a real key (a fixed additive offset would collide
     once 150k*SF crosses it, fanning out the full-outer join)."""
-    ensure_session_conf(spark)
     cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", F.round("c_acctbal", 2).alias("bal"))
     k = F.col("c_custkey")
@@ -607,7 +597,6 @@ def compaction_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_table_version,
     )
 
-    ensure_session_conf(spark)
     td = tempfile.mkdtemp(prefix="compaction_inv_")
     try:
         root = os.path.join(td, "cust_bal")
@@ -705,7 +694,6 @@ def user_path_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    ensure_session_conf(spark)
     events = read_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -752,7 +740,6 @@ def events_dow_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     is ISO-numbered (1=Monday) explicitly because engines disagree on
     the default (Spark dayofweek is 1=Sunday, DuckDB dayofweek is
     0=Sunday — both avoided)."""
-    ensure_session_conf(spark)
     events = read_table(spark, sf_dir, "events")
     return (
         events.select(
@@ -788,7 +775,6 @@ def order_percentile_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     (value ordering only — no arbitrary id tiebreak needed)."""
     from pyspark.sql import Window
 
-    ensure_session_conf(spark)
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice")
     w = Window.partitionBy("o_orderstatus").orderBy("o_totalprice")
@@ -835,7 +821,6 @@ def events_dedup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     .start for any timezone whose UTC offset is a 30-minute
     multiple, and unlike F.window it cannot shift under a
     Nepal-class (+5:45) session timezone."""
-    ensure_session_conf(spark)
     us = F.unix_micros(F.col("ts"))
     return (
         read_table(spark, sf_dir, "events")
@@ -912,7 +897,6 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str,
     combines map-side, so a hot destination folds per-partition
     before the shuffle.
     """
-    ensure_session_conf(spark)
     from simpleetlpipeline_spark.cache import track
 
     # Posting-list pair build (same shape as copurchase_pairs: one
@@ -1090,7 +1074,6 @@ def monthly_sales_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     everywhere, and plans/analytics.int128_fetch_probe carries a
     deliberate HUGEINT so the r8 driver run confirms the mechanism.
     """
-    ensure_session_conf(spark)
     dec = F.col("o_totalprice").cast("decimal(18,2)")
     orders = (
         read_table(spark, sf_dir, "orders")
@@ -1206,7 +1189,6 @@ def retract_base_canary(spark: SparkSession, sf_dir: str) -> DataFrame:
     was an un-cast INT128 oracle column, see the parent's docstring).
 
     Scale: one map-side-combined hash aggregate, |months| groups."""
-    ensure_session_conf(spark)
     return (
         read_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == COMPLETED)
@@ -1246,7 +1228,6 @@ def retract_delta_canary(spark: SparkSession, sf_dir: str) -> DataFrame:
     this brackets every layer of the parent: base red → base rollup;
     delta red → CDC algebra; both green + parent red → the merge or
     the canonicalizer."""
-    ensure_session_conf(spark)
     dec = F.col("o_totalprice").cast("decimal(18,2)")
     orders = (
         read_table(spark, sf_dir, "orders")
@@ -1325,7 +1306,6 @@ def revenue_cube_nation_segment(spark: SparkSession,
     BIGINT outputs; NULL grouping keys are rendered 'ALL' (no TPC-H
     nation/segment uses that token), with g_nation/g_segment
     carrying the authoritative subtotal flags."""
-    ensure_session_conf(spark)
     cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_mktsegment")
     nation = read_table(spark, sf_dir, "nation").select(
@@ -1394,7 +1374,6 @@ def item_cooccurrence_cf(spark: SparkSession, sf_dir: str,
     catalog-sized — broadcast), top-N as TakeOrderedAndProject.
     All inputs to the score are exact integers; sqrt/divide is a
     fixed IEEE chain floored at 4dp, ties to the (a, b) key."""
-    ensure_session_conf(spark)
     baskets = (
         read_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
@@ -1500,7 +1479,6 @@ def basket_lift_rules(spark: SparkSession, sf_dir: str,
     the basket shuffle ran up to 4x instead of 1x. Independent
     cheap columnar scans for the broadcast sides beat a shared
     cache that every broadcast job rebuilds; reverted."""
-    ensure_session_conf(spark)
     baskets = (
         read_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
@@ -1624,7 +1602,6 @@ def copurchase_triangles(spark: SparkSession, sf_dir: str,
     (deterministic in both engines)."""
     from simpleetlpipeline_spark.cache import track
 
-    ensure_session_conf(spark)
     baskets = (
         read_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
@@ -1748,7 +1725,6 @@ def cf_holdout_hitrate(spark: SparkSession, sf_dir: str,
     from simpleetlpipeline_spark.functions.similarity import _table_bytes
     from simpleetlpipeline_spark.operators.aggregates import salted_topk
 
-    ensure_session_conf(spark)
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate")
     li = read_table(spark, sf_dir, "lineitem").select(
@@ -1926,7 +1902,6 @@ def cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by live-key cardinality, and a routine base⊕delta merge
     (see monthly_sales_incremental) keeps reprocessing incremental.
     """
-    ensure_session_conf(spark)
     log = read_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type",
         F.floor(F.col("value") * 100).cast("long").alias("cents"))
@@ -1989,8 +1964,6 @@ def fd_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the union is four tiny rows. At 100 TB you would fuse FDs that
     share a determinant into one agg pass and sample-first to
     prioritize which FDs deserve the exact pass."""
-    ensure_session_conf(spark)
-
     def _check(df: DataFrame, name: str, key, dep) -> DataFrame:
         return (
             df.select(key.alias("k"), dep.alias("v"))
@@ -2068,7 +2041,6 @@ def customer_retention_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each cohort keyset feeds two of the three set-op branches, so
     both are persisted (cache.track-owned): one pruned scan + dedup
     per cohort instead of three."""
-    ensure_session_conf(spark)
     from simpleetlpipeline_spark.cache import track
 
     orders = read_table(spark, sf_dir, "orders").select(
@@ -2201,7 +2173,6 @@ def copurchase_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     hop-1 expansion, hop-2 expansion), so it is persisted
     (_sym_copurchase_edges): ONE basket shuffle feeds the whole
     traversal instead of being recomputed per hop."""
-    ensure_session_conf(spark)
     sym = _sym_copurchase_edges(spark, sf_dir)
     deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("degree"))
     seed = (deg.orderBy(F.desc("degree"), F.asc("a")).limit(1)
@@ -2280,7 +2251,6 @@ def copurchase_degree_powerlaw(spark: SparkSession,
     (|parts| groups) -> one histogram agg (|distinct degrees|
     groups) -> a one-row moment aggregate. Nothing after the degree
     agg touches more than |distinct degrees| rows."""
-    ensure_session_conf(spark)
     sym = _sym_copurchase_edges(spark, sf_dir)
     deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("degree"))
     hist = deg.groupBy("degree").agg(
@@ -2426,7 +2396,6 @@ def brand_triple_rules(spark: SparkSession, sf_dir: str,
     joined. Final top-N is TakeOrderedAndProject."""
     from simpleetlpipeline_spark.cache import track
 
-    ensure_session_conf(spark)
     part = read_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     baskets = track(
         read_table(spark, sf_dir, "lineitem")
@@ -2546,7 +2515,6 @@ def frequent_event_trigrams(spark: SparkSession, sf_dir: str,
     """
     from pyspark.sql import Window
 
-    ensure_session_conf(spark)
     events = read_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")

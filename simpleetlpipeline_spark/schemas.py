@@ -218,9 +218,3 @@ TESTDATA_SCHEMAS: dict[str, StructType] = {
     "documents": DOCUMENTS,
     "embeddings": EMBEDDINGS,
 }
-
-#: Small dimension tables that should be broadcast in joins. At any
-#: realistic scale factor these stay orders of magnitude below the
-#: fact tables, so shipping them to every executor beats shuffling
-#: the fact side.
-BROADCAST_DIMS = frozenset({"region", "nation", "supplier", "part", "customer"})

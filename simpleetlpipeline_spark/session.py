@@ -8,6 +8,10 @@ UTC-naive oracle) and for scale (AQE on, skew-join handling on,
 shuffle partitions sized to the actual parallelism instead of the
 200 default, which is wrong in both directions — too many for local
 runs, too few at 100 TB where AQE coalescing takes over).
+
+get_spark sets this conf at launch; ensure_session_conf asserts it on
+any other session, once per catalog entry call (plans.catalog wraps
+every QUERIES value). Query code never asserts conf itself.
 """
 
 from __future__ import annotations
@@ -16,7 +20,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-#: Conf applied to every session we build, and re-asserted (for the
+#: Conf applied to every session we build, and asserted (for the
 #: runtime-settable subset) on sessions handed to us by a driver.
 _RUNTIME_CONF = {
     # Deterministic timestamp semantics: parquet stores UTC instants;
@@ -91,15 +95,18 @@ _LOCAL_SCAN_CONF = {
 }
 
 
+_SHUFFLE_KEY = "spark.sql.shuffle.partitions"
+
+
 def _runtime_conf(local: bool = True) -> dict[str, str]:
     conf = dict(_RUNTIME_CONF)
     if local:
         conf.update(_LOCAL_SCAN_CONF)
     # Shuffle (and streaming state-store) partition count sized to the
     # actual parallelism instead of the 200 default — also applied to
-    # externally-built sessions, where stateful streaming would
-    # otherwise run 200 state tasks per micro-batch.
-    conf["spark.sql.shuffle.partitions"] = str(default_parallelism())
+    # externally-built sessions that leave it unset, where stateful
+    # streaming would otherwise run 200 state tasks per micro-batch.
+    conf[_SHUFFLE_KEY] = str(default_parallelism())
     return conf
 
 
@@ -125,8 +132,6 @@ def get_spark(app_name: str = "simpleetlpipeline-spark",
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions",
-                str(shuffle_partitions or cpus))
         # Local mode packs driver + all executor threads into ONE JVM
         # whose default heap is 1g — 32 concurrent tasks moving Arrow
         # batches starve the GC there (observed: GCLocker retry
@@ -146,10 +151,10 @@ def get_spark(app_name: str = "simpleetlpipeline-spark",
         # \r-bars can push it out of the window.
         .config("spark.ui.showConsoleProgress", "false")
     )
-    for k, v in _runtime_conf().items():
+    conf = _runtime_conf()
+    conf[_SHUFFLE_KEY] = str(shuffle_partitions or cpus)
+    for k, v in conf.items():
         builder = builder.config(k, v)
-    builder = builder.config("spark.sql.shuffle.partitions",
-                             str(shuffle_partitions or cpus))
     return builder.getOrCreate()
 
 
@@ -194,14 +199,19 @@ def ensure_session_conf(spark: SparkSession) -> SparkSession:
     query semantics. The local-only scan knobs (_LOCAL_SCAN_CONF)
     are applied ONLY when the session's master is local[*] — a
     cluster session keeps Spark's 128 MB/4 MB defaults, which are
-    correct for HDFS/S3-backed multi-file tables. Also ships this
-    package to executor workers (see _ship_package).
+    correct for HDFS/S3-backed multi-file tables. A shuffle-partition
+    count the session sets explicitly is kept, so a deliberately
+    hostile one stays hostile. Also ships this package to executor
+    workers (see _ship_package).
     """
     try:
         master = spark.conf.get("spark.master", "") or ""
     except Exception:
         master = ""
-    for k, v in _runtime_conf(local=master.startswith("local")).items():
+    conf = _runtime_conf(local=master.startswith("local"))
+    if spark.conf.get(_SHUFFLE_KEY, None) is not None:  # None: unset
+        del conf[_SHUFFLE_KEY]
+    for k, v in conf.items():
         try:
             spark.conf.set(k, v)
         except Exception:

@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from simpleetlpipeline_spark.schemas import TESTDATA_SCHEMAS
-from simpleetlpipeline_spark.session import ensure_session_conf
 
 
 def _events_stream_schema(spark: SparkSession, sf_dir: str) -> StructType:
@@ -56,7 +55,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet (finite replay of
     the same files the batch path reads; ts normalized to
     microsecond timestamps identically to io.read_table)."""
-    ensure_session_conf(spark)
     # The file source requires a directory; point it at sf_dir and
     # select only the events file(s) via glob filter.
     raw = (
@@ -97,8 +95,7 @@ _REPLAY_CKPT_ROOT = "/dev/shm" if os.path.isdir("/dev/shm") else None
 def _needs_nodata_batch(sdf: DataFrame, output_mode: str) -> bool:
     """True when the trailing no-data micro-batch is LOAD-BEARING for
     this consumer — i.e. disabling it would change the result, not
-    just the cost (round-13 insurance; the round-12 verdict's one
-    behavioural caveat on the replay runner).
+    just the cost.
 
     The no-data batch's only work is advancing the watermark so
     state can finalize. That final advance changes emitted rows for:
@@ -111,17 +108,29 @@ def _needs_nodata_batch(sdf: DataFrame, output_mode: str) -> bool:
       fire on watermark advance) — in any output mode.
     Complete/update aggregates, inner joins and dropDuplicates emit
     eagerly per data batch, so the final advance is pure cost there.
+    Decided from the analyzed plan's nodes, not its text.
     """
-    plan = sdf._jdf.queryExecution().analyzed().toString().lower()
-    if "eventtimetimeout" in plan:
-        return True
-    if output_mode != "append":
-        return False
-    if "aggregate" in plan or "session_window" in plan:
-        return True
-    return any(t in plan for t in
-               ("leftouter", "rightouter", "fullouter",
-                "leftanti", "leftsemi"))
+    event_time = (sdf.sparkSession._jvm.org.apache.spark.sql.streaming
+                  .GroupStateTimeout.EventTimeTimeout())
+    append = output_mode == "append"
+    stack = [sdf._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+        name = node.nodeName()
+        if name in ("FlatMapGroupsWithState",
+                    "FlatMapGroupsInPandasWithState"):
+            if node.timeout().equals(event_time):
+                return True
+        elif append and name == "Aggregate":
+            return True
+        elif (append and name == "Join"
+              and node.joinType().sql() != "INNER"
+              and node.left().isStreaming()
+              and node.right().isStreaming()):
+            return True
+    return False
 
 
 def run_stream_to_df(sdf: DataFrame, output_mode: str = "complete") -> DataFrame:
@@ -130,18 +139,13 @@ def run_stream_to_df(sdf: DataFrame, output_mode: str = "complete") -> DataFrame
     currently-visible files in bounded batches then stops — the
     replay-to-catch-up pattern.
 
-    Round 12 (guide §1.1 measurement: per-batch durationMs): the
-    trailing NO-DATA micro-batch is disabled for the replay. Its only
-    work is advancing the watermark to evict state — load-bearing on
-    an infinite stream, a pure cost on a finite replay whose state
-    dies with the query: every memory-sink consumer here (complete-
-    mode aggregates, update-mode NoTimeout stateful ops, eager-
-    emitting inner joins and dropDuplicates) emits NOTHING in it, yet
-    it paid a full state-store maintenance pass + fsync'd WAL commit
-    (measured: 1.7-6s addBatch on the join replay). The conf is
-    captured by the stream's cloned session at start() and restored
-    after, so checkpointed multi-phase streams driven outside this
-    runner keep the default."""
+    The trailing NO-DATA micro-batch is disabled for the replay unless
+    _needs_nodata_batch says the result depends on it: on a finite
+    replay it only advances the watermark, yet pays a full state-store
+    maintenance pass + fsync'd WAL commit (measured: 1.7-6s addBatch
+    on the join replay). The conf is captured by the stream's cloned
+    session at start() and restored after, so checkpointed multi-phase
+    streams driven outside this runner keep the default."""
     name = f"stream_{uuid.uuid4().hex[:12]}"
     spark = sdf.sparkSession
     before = spark.conf.get("spark.sql.shuffle.partitions")

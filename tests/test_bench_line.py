@@ -1,12 +1,13 @@
 """The driver parses bench.py's final stdout line from a ~2000-byte
 tail window; these tests pin the line-budget contract so catalog
-growth can never silently push the JSON back out of the window."""
+growth can never silently push the JSON back out of the window, and
+pin execute(), the one timing action every bench tool shares."""
 
 from __future__ import annotations
 
 import json
 
-from bench import LINE_BUDGET, bounded_line, noise_fields
+from bench import LINE_BUDGET, bounded_line, execute, noise_fields
 
 
 def _result(queries: dict) -> dict:
@@ -130,3 +131,19 @@ def test_bench_full_ownership_noise_aware():
     # corrupt/absent incumbent fields fall back permissive
     assert why(1, 50.0, True, {}) is None
     assert why(1, 50.0, True, {"repeat": "x", "value": None}) is None
+
+
+def test_execute_computes_every_column_once_per_row(spark):
+    """The shared timing action runs the whole plan: a Python-UDF
+    column (which count() prunes away) runs exactly once per row."""
+    from pyspark.sql import functions as F
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def bump(x):
+        calls.add(1)
+        return x
+
+    df = spark.range(100).select(F.udf(bump, "long")("id").alias("v"))
+    assert execute(df) == 100
+    assert calls.value == 100

@@ -157,14 +157,9 @@ def _hostile_build(spark, monkeypatch, names, tz="America/Los_Angeles"):
         s.conf.set("spark.sql.session.timeZone", tz)
         return s
 
-    # Patch every module-level binding (each plans module imported the
-    # name at import time) plus the session module itself (io.py late-
-    # imports from there).
-    import simpleetlpipeline_spark
-    for mod in list(__import__("sys").modules.values()):
-        if (getattr(mod, "__name__", "").startswith("simpleetlpipeline_spark")
-                and getattr(mod, "ensure_session_conf", None) is real):
-            monkeypatch.setattr(mod, "ensure_session_conf", pin_hostile_tz)
+    # The catalog boundary looks the function up on the session module
+    # at call time, so this one binding reaches every entry.
+    monkeypatch.setattr(sess, "ensure_session_conf", pin_hostile_tz)
     out = {}
     try:
         for n in names:
@@ -193,3 +188,37 @@ def test_converted_queries_survive_hostile_analysis_tz(spark, monkeypatch):
         truth[n] = sorted(str(tuple(r)) for r in df.collect())
     hostile = _hostile_build(spark, monkeypatch, names)
     assert hostile == truth
+
+
+def test_catalog_boundary_asserts_conf_on_hostile_session(spark):
+    """The catalog wrapper is the one place conf is asserted: an entry
+    called on a session with a hostile timezone AND the nanos-as-long
+    read flag off (a driver's own session) returns the UTC result."""
+    from simpleetlpipeline_spark.plans import catalog
+
+    run = catalog.QUERIES["events_hourly"]
+    truth = sorted(run(spark, "/root/testdata/sf0.001").collect())
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+        got = sorted(run(spark, "/root/testdata/sf0.001").collect())
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    assert got == truth
+
+
+def test_catalog_boundary_keeps_explicit_shuffle_partitions(spark):
+    """A shuffle-partition count the session sets explicitly survives
+    a catalog call, so a deliberately hostile partitioning (the
+    SPARK_GRAFT_ORACLE_SHUFFLE=3 sweep) really runs at that count."""
+    from simpleetlpipeline_spark.plans import catalog
+
+    key = "spark.sql.shuffle.partitions"
+    try:
+        spark.conf.set(key, "3")
+        catalog.QUERIES["events_hourly"](
+            spark, "/root/testdata/sf0.001").collect()
+        assert spark.conf.get(key) == "3"
+    finally:
+        spark.conf.set(key, "4")

@@ -4,6 +4,7 @@ with the batch DataFrame path on the same data."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from simpleetlpipeline_spark.plans.analytics import QUERIES as BATCH
@@ -112,9 +113,11 @@ def test_runner_keeps_nodata_batch_for_append_aggregates(spark, tmp_path):
     """run_stream_to_df disables the trailing no-data micro-batch as
     a replay optimization; for an APPEND-mode watermarked aggregate
     that batch is load-bearing (windows older than the final
-    watermark emit only when it advances), so the round-13 guard must
+    watermark emit only when it advances), so the runner's guard must
     keep it enabled there — a future append-mode consumer routed
-    through the runner must not silently lose its last windows."""
+    through the runner must not silently lose its last windows. The
+    decision itself, per consumer shape, is pinned by
+    test_nodata_batch_decided_from_plan_nodes."""
     import datetime as dt
     import uuid as _uuid
 
@@ -138,13 +141,60 @@ def test_runner_keeps_nodata_batch_for_append_aggregates(spark, tmp_path):
            .groupBy(F.window("ts", "1 hour"))
            .agg(F.count(F.lit(1)).alias("n"))
            .select(F.col("window.start").alias("ws"), "n"))
-    assert W._needs_nodata_batch(agg, "append")
-    assert not W._needs_nodata_batch(agg, "complete")
     got = {r["ws"]: r["n"]
            for r in W.run_stream_to_df(agg, output_mode="append").collect()}
     # the single data batch ends with watermark 11:00: the 09:00
     # window emits ONLY via the trailing no-data batch
     assert got.get(t(9)) == 2, f"final window lost: {got}"
+
+
+def _pandas_state(sdf, timeout):
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    def fold(key, pdfs, state):
+        yield from pdfs
+
+    return sdf.groupBy("user_id").applyInPandasWithState(
+        fold, outputStructType=sdf.schema, stateStructType="n long",
+        outputMode="update", timeoutConf=getattr(GroupStateTimeout, timeout))
+
+
+#: consumer shape -> (build from an events stream, output mode,
+#: whether the final no-data batch is load-bearing)
+NODATA_SHAPES = {
+    "append_aggregate": (
+        lambda s: s.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour")).count(), "append", True),
+    "complete_aggregate": (
+        lambda s: s.groupBy("event_type").count(), "complete", False),
+    "append_inner_stream_join": (
+        lambda s: W.purchase_view_join_stream(s), "append", False),
+    "append_left_outer_stream_join": (
+        lambda s: W.purchase_view_join_stream(s, how="left_outer"),
+        "append", True),
+    "dedup_within_watermark": (
+        lambda s: s.withWatermark("ts", "1 hour")
+        .dropDuplicatesWithinWatermark(["user_id", "event_type"]),
+        "append", False),
+    "update_pandas_state_no_timeout": (
+        lambda s: _pandas_state(s, "NoTimeout"), "update", False),
+    "update_pandas_state_event_time_timeout": (
+        lambda s: _pandas_state(s.withWatermark("ts", "1 hour"),
+                                "EventTimeTimeout"), "update", True),
+    # stateless: the higher-order aggregate() only PRINTS like an
+    # aggregate in the plan text
+    "stateless_higher_order_aggregate": (
+        lambda s: s.select(F.aggregate(
+            F.array("value", "value"), F.lit(0.0),
+            lambda acc, x: acc + x).alias("v2")), "append", False),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(NODATA_SHAPES))
+def test_nodata_batch_decided_from_plan_nodes(spark, sf_dir, shape):
+    build, mode, load_bearing = NODATA_SHAPES[shape]
+    sdf = build(W.read_events_stream(spark, sf_dir))
+    assert W._needs_nodata_batch(sdf, mode) is load_bearing
 
 
 def test_totals_sink_restart_resume_idempotent(spark, tmp_path):

@@ -35,6 +35,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import execute  # noqa: E402
+
 EXCLUDE = {"embedding_neardup", "etl_pipeline_run"}
 
 RATIO_LIMIT = 15.0
@@ -55,7 +57,7 @@ def run_set(spark, sf_dir: str, names: list[str]) -> dict[str, dict]:
         for _ in range(2):
             t0 = time.perf_counter()
             try:
-                n = catalog.QUERIES[name](spark, sf_dir).count()
+                n = execute(catalog.QUERIES[name](spark, sf_dir))
             except Exception as e:  # a crash at scale IS the finding
                 err = f"{type(e).__name__}: {e}"
                 release_caches()
@@ -86,9 +88,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     # Warm-up (JVM, codegen, Python worker pool, streaming machinery)
     # — same reasoning as bench.py.
-    catalog.QUERIES["dedup_exact"](spark, "/root/testdata/sf0.001").count()
-    catalog.QUERIES["media_meta_extract"](
-        spark, "/root/testdata/sf0.001").count()
+    execute(catalog.QUERIES["dedup_exact"](spark, "/root/testdata/sf0.001"))
+    execute(catalog.QUERIES["media_meta_extract"](
+        spark, "/root/testdata/sf0.001"))
     catalog.QUERIES["streaming_events_hourly"](
         spark, "/root/testdata/sf0.001").collect()
 

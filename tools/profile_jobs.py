@@ -17,7 +17,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import execute  # noqa: E402
 
 EVDIR = "/tmp/spark_graft_events"
 
@@ -62,7 +64,7 @@ def main() -> None:
         spark.sparkContext.setJobDescription(name)
         t0 = time.perf_counter()
         w0 = time.time() * 1000
-        catalog.QUERIES[name](spark, args.sf).count()
+        execute(catalog.QUERIES[name](spark, args.sf))
         runs.append((name, time.perf_counter() - t0,
                      w0, time.time() * 1000))
         spark.sparkContext.setJobDescription(None)

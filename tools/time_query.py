@@ -1,7 +1,7 @@
 """Per-query timing probe for optimization work: runs the named
 catalog queries N times each on one warm session (bench.py's exact
-run_once action: construct + count/collect) and prints per-query
-min/median plus the Spark job count of one execution — the fast,
+action: construct + bench.execute) and prints per-query min/median
+plus the Spark job count of one execution — the fast,
 noise-resistant way to A/B a single operator without a full catalog
 pass. Usage:
 
@@ -16,7 +16,9 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import execute  # noqa: E402
 
 
 def main() -> None:
@@ -48,8 +50,7 @@ def main() -> None:
         jobs0 = len(tracker.getJobIdsForGroup(None))
         for _ in range(args.repeat):
             t0 = time.perf_counter()
-            df = fn(spark, args.sf)
-            df.count()
+            execute(fn(spark, args.sf))
             samples.append(time.perf_counter() - t0)
         jobs = (len(tracker.getJobIdsForGroup(None)) - jobs0) / args.repeat
         s1 = steal()
